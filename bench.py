@@ -20,14 +20,15 @@ while keeping the run short.
 
 HARNESS CHANGE (r15, measurement-bug fix per the r14 verdict): every
 query execution — warm-up and timed — is followed by a cache release
-(tracked persists, graph localCheckpoints, ``spark.catalog.clearCache``)
-OUTSIDE the timed region.  Before this, Spark's CacheManager substituted
-warm-up-populated InMemoryRelations into the timed passes by
-canonicalized-plan equality, so persist-heavy queries timed cache reads
-instead of compute (hashed_vector_topk read 0.67 s with warm caches vs
-its honest recompute cost).  r14 and earlier BENCH artifacts are
-therefore NOT comparable per-query to r15+ for queries whose pipelines
-persist; the r15 re-baseline in BASELINE.md records both series.
+(every persist and local checkpoint in the ``operators/caching.py``
+registry, then ``spark.catalog.clearCache``) OUTSIDE the timed region.
+Before this, Spark's CacheManager substituted warm-up-populated
+InMemoryRelations into the timed passes by canonicalized-plan equality,
+so persist-heavy queries timed cache reads instead of compute
+(hashed_vector_topk read 0.67 s with warm caches vs its honest recompute
+cost). r14 and earlier BENCH artifacts are therefore NOT comparable
+per-query to r15+ for queries whose pipelines persist; the r15
+re-baseline in BASELINE.md records both series.
 """
 
 from __future__ import annotations
@@ -41,7 +42,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from cryptocurrency_data_pipeline_spark.operators import caching, graph  # noqa: E402
+from cryptocurrency_data_pipeline_spark.operators import caching  # noqa: E402
 from cryptocurrency_data_pipeline_spark.queries import QUERIES  # noqa: E402
 from cryptocurrency_data_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -60,7 +61,6 @@ def _release_caches(spark) -> None:
     happens inside the timed region and is legitimate.
     """
     caching.release_all(spark)
-    graph.release_checkpoints(spark)
     spark.catalog.clearCache()
 
 #: Headline set: one per operator family, weighted toward the heavy paths.

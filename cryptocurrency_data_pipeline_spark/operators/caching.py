@@ -1,73 +1,142 @@
-"""Explicit cache-lifetime tracking for persisted intermediates.
+"""The one owner of cached intermediates: persists and local checkpoints.
 
-Several operators ``persist()`` a multi-consumer intermediate (the
-MinHash shingle frame, the SemDeDup normalized assignment, the DSIR tf
-frame, the fuzzy q-gram frame).  For a one-shot query the ContextCleaner
-reclaims those blocks at GC time, which is fine — but composed plans
-(``plans/corpus.py``) and benchmark loops call these operators
-repeatedly in one long-lived session, where lazily-reclaimed blocks
-accumulate in the block manager.
+No other module calls ``persist``/``cache``/``localCheckpoint``/
+``unpersist``; they go through four functions here:
 
-This module is the eager-release discipline (the ``graph.py``
-checkpoint-release pattern, generalized): operators register each
-persisted frame via :func:`track`, and whoever owns the terminal action
-calls :func:`release_all` afterwards.  Releasing is always SAFE —
-``persist`` (unlike ``localCheckpoint``) keeps full lineage, so a
-released frame silently recomputes if some caller re-uses it; the only
-cost of over-releasing is recomputation, never a failure.
+- :func:`persist` — ``df.persist()`` (the ``cache()`` level), registered;
+- :func:`checkpoint` — ``df.localCheckpoint(eager)``, registered by the
+  id of the RDD that backs it;
+- :func:`release` — free ONE registered frame now: the ``finally`` of a
+  local persist pair, or a superseded generation of an iterative loop.
+  A frame that is not (or no longer) registered is a no-op, so a
+  repeated release is safe;
+- :func:`release_all` — free everything registered on one SparkContext.
+  The owner of the terminal action calls it (``Pipeline.run``, benchmark
+  loops), on the failure path as well as the success path.
 
-Entries are keyed by SparkContext *identity* so parallel sessions (or a
-restarted context in tests) never release each other's blocks.
+Lifetime contract:
+
+- Releasing a PERSISTED frame is always safe.  ``persist`` keeps full
+  lineage, so a released frame silently recomputes if a caller re-uses
+  it; the only cost of over-releasing is recomputation.
+- Releasing a CHECKPOINT leaves its frame unusable.  ``localCheckpoint``
+  truncates lineage, so the blocks cannot be recomputed: a caller that
+  keeps a checkpoint-backed result (``graph.connected_components``) must
+  be done with it before its owner calls :func:`release_all`.
+
+Entries are keyed by SparkContext identity, so parallel sessions (or a
+restarted context in tests) never release each other's blocks — for a
+checkpoint a wrong release is unrecoverable.  Persisted frames are held
+by WEAK reference: a strong module-global ref would pin every frame for
+the session lifetime, and a caller that never releases could no longer
+rely on the ContextCleaner reclaiming the blocks at GC time.  A
+checkpoint entry also keeps its RDD id, which outlives the Python frame:
+the final generation of a loop stays releasable after the loop's local
+frame is gone.
 """
 
 from __future__ import annotations
 
+import threading
 import weakref
 
 from pyspark.sql import DataFrame
 
-#: (SparkContext, weakref-to-DataFrame) pairs whose ``persist()`` the
-#: engine owns.  WEAK references on purpose: a strong module-global ref
-#: would pin every tracked frame for the session lifetime, so a caller
-#: that never invokes release_all could no longer rely on the
-#: ContextCleaner-at-GC fallback — the module would worsen the very leak
-#: it exists to fix.  A frame the caller dropped simply GCs (cleaner
-#: reclaims its blocks) and its entry here goes dead.
-_TRACKED: list[tuple[object, weakref.ReferenceType]] = []
+#: (SparkContext, weakref-to-frame, checkpoint RDD id or None) per
+#: registration.  Locked: foreachBatch bodies persist from the streaming
+#: callback thread while the driver thread may be releasing.
+_LIVE: list[tuple[object, weakref.ReferenceType, int | None]] = []
+_LOCK = threading.Lock()
 
 
-def track(df: DataFrame) -> DataFrame:
-    """Register a persisted frame for later :func:`release_all`.
-
-    Returns ``df`` unchanged so call sites stay one expression:
-    ``track(frame.persist())``.
-    """
-    _TRACKED.append((df.sparkSession.sparkContext, weakref.ref(df)))
+def persist(df: DataFrame) -> DataFrame:
+    """Persist ``df`` and register it; returns the persisted frame."""
+    df = df.persist()
+    _register(df, None)
     return df
 
 
-def release_all(spark=None) -> int:
-    """Unpersist every tracked frame (non-blocking).
+def checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
+    """``localCheckpoint`` ``df`` and register its backing RDD.
 
-    With ``spark`` given, only frames belonging to that session's
-    SparkContext are released (identity comparison); without it, all.
-    Returns the number of frames released.  Frames whose context has
-    already stopped are dropped from tracking without error.
-    """
-    target_sc = spark.sparkContext if spark is not None else None
-    kept: list[tuple[object, weakref.ReferenceType]] = []
-    released = 0
-    for sc, ref in _TRACKED:
-        if target_sc is not None and sc is not target_sc:
-            kept.append((sc, ref))
-            continue
-        df = ref()
-        if df is None:
-            continue  # caller dropped it; ContextCleaner reclaimed at GC
-        try:
+    Lazy by default: the caller's next action materializes the blocks
+    (one job instead of a checkpoint job plus the action's own scan)."""
+    out = df.localCheckpoint(eager=eager)
+    _register(out, _checkpoint_rdd_id(out))
+    return out
+
+
+def release(df: DataFrame) -> None:
+    """Free ``df``'s blocks NOW (asynchronously) if it is registered."""
+    for sc, _, rid in _take(lambda e: e[1]() is df):
+        _free(sc, df, rid)
+
+
+def release_all(spark=None) -> int:
+    """Free every registered frame and checkpoint on ``spark``'s context
+    (identity comparison); without ``spark``, on every context.  Returns
+    the number of entries released.  Entries whose context has stopped
+    are dropped without error."""
+    target = spark.sparkContext if spark is not None else None
+    taken = _take(lambda e: target is None or e[0] is target)
+    for sc, ref, rid in taken:
+        _free(sc, ref(), rid)
+    return len(taken)
+
+
+def _register(df: DataFrame, rid: int | None) -> None:
+    with _LOCK:
+        _LIVE.append((df.sparkSession.sparkContext, weakref.ref(df), rid))
+
+
+def _take(match) -> list[tuple[object, weakref.ReferenceType, int | None]]:
+    """Unregister and return the entries ``match`` selects.  Persist
+    entries whose frame was garbage-collected are dropped on the way
+    (the ContextCleaner reclaims their blocks)."""
+    with _LOCK:
+        taken, kept = [], []
+        for e in _LIVE:
+            if match(e):
+                taken.append(e)
+            elif e[2] is not None or e[1]() is not None:
+                kept.append(e)
+        _LIVE[:] = kept
+    return taken
+
+
+def _free(sc, df: DataFrame | None, rid: int | None) -> None:
+    try:
+        if rid is not None:
+            jrdd = sc._jsc.getPersistentRDDs().get(rid)
+            if jrdd is not None:
+                jrdd.unpersist(False)
+        elif df is not None:
             df.unpersist(False)
-            released += 1
-        except Exception:
-            pass  # stopped context / already-released frame: nothing to free
-    _TRACKED[:] = kept
-    return released
+    except Exception:
+        pass  # stopped context / already-released blocks: nothing to free
+
+
+def _checkpoint_rdd_id(df: DataFrame) -> int | None:
+    """The block-manager RDD id backing a ``localCheckpoint``-ed frame.
+
+    A checkpointed Dataset's analyzed plan is a ``LogicalRDD`` wrapping
+    the materialized RDD — its id, exactly, is what to unpersist.
+    Extracting the id from the plan (rather than diffing
+    ``getPersistentRDDs`` snapshots) matters: the first checkpoint action
+    also materializes any shared ``persist()`` caches feeding it (e.g.
+    the MinHash shingle cache upstream of an edge list), and a snapshot
+    diff would claim — then evict — those, forcing every later run to
+    refill them.
+    """
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            return int(plan.rdd().id())
+    except Exception:
+        pass
+    return None
+
+
+def _persistent_rdd_ids(sc) -> set[int]:
+    """Ids of RDDs currently pinned in the block manager (storage level set)."""
+    return {int(i) for i in sc._jsc.getPersistentRDDs().keySet()}

@@ -32,7 +32,7 @@ from pyspark.sql.functions import pandas_udf
 #: ops per doc — well under a millisecond.
 _CHAR_SEEK_LIM = 4096
 
-from cryptocurrency_data_pipeline_spark.operators.caching import track
+from cryptocurrency_data_pipeline_spark.operators import caching
 from cryptocurrency_data_pipeline_spark.operators.text import fingerprint, shingles, tokens
 
 
@@ -156,7 +156,7 @@ def lsh_candidate_pairs(
     # and each alias re-computes the 8-bucket OPH signature over the
     # cached shingle hashes (~4 s of task CPU per side at sf0.1) — the
     # cache collapses both onto one signature pass.
-    banded = track(
+    banded = caching.persist(
         sh.where(F.size("sh") > 0)
         .select(
             "id",
@@ -164,7 +164,6 @@ def lsh_candidate_pairs(
                 band_keys(minhash_signature(F.col("hashes")), bands)
             ).alias("band_key"),
         )
-        .persist()
     )
     a, b = banded.alias("a"), banded.alias("b")
     return (
@@ -195,7 +194,7 @@ def minhash_near_dups(
     shingle frame is persisted so shingling+md5 runs once for both the
     signature pass and the verification joins.
     """
-    sh = track(_shingle_frame(df, text_col, id_col, n).persist())
+    sh = caching.persist(_shingle_frame(df, text_col, id_col, n))
     pairs = lsh_candidate_pairs(df, text_col, id_col, bands, n, sh=sh)
     shingle_sets = sh.select("id", "sh")
     return (
@@ -463,7 +462,7 @@ def segment_boilerplate(
     # Measured NOT to want spread_small_scan (r15 interleaved hermetic
     # A/B: 1.33 s unspread vs 1.37 spread — segment hashing is too
     # cheap to pay the repartition).
-    segs = track(
+    segs = caching.persist(
         df.select(F.col(id_col), toks.alias("tk"), seg_idx.alias("idx"))
         .select(
             id_col,
@@ -478,7 +477,6 @@ def segment_boilerplate(
                 )
             ).alias("seg_hash"),
         )
-        .persist()
     )
     freq = segs.groupBy("seg_hash").agg(
         F.count_distinct(F.col(id_col)).alias("seg_df")

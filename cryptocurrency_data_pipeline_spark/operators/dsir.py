@@ -43,7 +43,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from cryptocurrency_data_pipeline_spark.operators.caching import track
+from cryptocurrency_data_pipeline_spark.operators import caching
 from cryptocurrency_data_pipeline_spark.operators.text import tokens
 
 
@@ -79,14 +79,14 @@ def importance_logweights(
     # persist it so the token explode + shuffle happens exactly once (the
     # ids.py precedent: un-deduplicated subtree reuse would re-tokenize
     # the corpus per instantiation; the cache is the collapsed
-    # doc x <=B frame, spill-friendly; tracked for eager release via
+    # doc x <=B frame, spill-friendly; registered for eager release via
     # caching.release_all after the caller's terminal action).
     # explode_outer, not explode: a zero-token doc (blank/null text) keeps
     # one null-token row — with a plain explode it would silently vanish
     # from the output instead of getting its well-defined empty-sum
     # weight of 0.  The phantom row's bucket is null, so it is excluded
     # from the distribution sketch below and contributes 0 to scoring.
-    tf = track(
+    tf = caching.persist(
         docs.select(
             *keys,
             target.alias("__is_target"),
@@ -95,7 +95,6 @@ def importance_logweights(
         .withColumn("__b", hashed_feature_bucket("__tok", n_buckets))
         .groupBy(*keys, "__is_target", "__b")
         .agg(F.count(F.lit(1)).alias("__tf"))
-        .persist()
     )
     # Raw + target bucket counts in ONE B-row aggregate (conditional sum),
     # totals as window sums over that single-partition B-row frame — no

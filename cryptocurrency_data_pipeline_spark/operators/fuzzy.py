@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cryptocurrency_data_pipeline_spark.operators.caching import track
+from cryptocurrency_data_pipeline_spark.operators import caching
 
 
 def qgrams(col, q: int = 3):
@@ -75,17 +75,16 @@ def fuzzy_self_pairs(
     # left side both consume the raw gram frame, so an un-cached subtree
     # would run the distinct + explode twice.  The pruned frame is then
     # persisted separately — it feeds both sides of the candidate join.
-    grams = track(
+    grams = caching.persist(
         keys.select(
             "__k", F.explode(qgrams(F.col("__k"), q)).alias("__gram")
-        ).persist()
+        )
     )
     if max_gram_df is not None:
         freq = grams.groupBy("__gram").agg(F.count(F.lit(1)).alias("__df"))
-        grams = track(
+        grams = caching.persist(
             grams.join(F.broadcast(freq.filter(F.col("__df") > max_gram_df)),
                        "__gram", "left_anti")
-            .persist()
         )
     a = grams.select(F.col("__k").alias("key_a"), "__gram")
     b = grams.select(F.col("__k").alias("key_b"), "__gram")

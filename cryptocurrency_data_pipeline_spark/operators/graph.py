@@ -30,107 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _persistent_rdd_ids(sc) -> set[int]:
-    """Ids of RDDs currently pinned in the block manager (storage level set)."""
-    return {int(i) for i in sc._jsc.getPersistentRDDs().keySet()}
-
-
-def _checkpoint_rdd_id(df: DataFrame) -> int | None:
-    """The block-manager RDD id backing a ``localCheckpoint``-ed DataFrame.
-
-    A checkpointed Dataset's analyzed plan is a ``LogicalRDD`` wrapping the
-    materialized RDD — its id, exactly, is what to unpersist when the
-    generation is superseded. Extracting the id from the plan (rather than
-    diffing ``getPersistentRDDs`` snapshots) matters: the first checkpoint
-    action also materializes any shared ``persist()`` caches feeding the
-    loop (e.g. the MinHash shingle cache upstream of the edge list), and a
-    snapshot diff would claim — then evict — those, forcing every later
-    run to refill them.
-    """
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            return int(plan.rdd().id())
-    except Exception:
-        pass
-    return None
-
-
-def _unpersist_rdd_id(sc, rid: int | None) -> None:
-    """Drop checkpoint blocks for ``rid`` NOW, not at GC time.
-
-    ``localCheckpoint(eager=True)`` pins its blocks until the ContextCleaner
-    notices the Python-side DataFrame was garbage-collected — lazy cleanup
-    that shows up as multi-second GC noise in repeated iterative runs. An
-    explicit async unpersist per superseded round keeps the block manager
-    flat at two label generations regardless of round count.
-    """
-    if rid is None:
-        return
-    jrdd = sc._jsc.getPersistentRDDs().get(rid)
-    if jrdd is not None:
-        jrdd.unpersist(False)
-
-
-class CheckpointHandle:
-    """Caller-held ownership of ONE ``connected_components`` result's
-    final-generation checkpoint blocks.
-
-    ``localCheckpoint`` truncates lineage, so once released the result
-    frame is unrecoverable — which is why the lifetime belongs to the
-    caller that holds the frame, not to the next operator invocation:
-    a result stays queryable across any number of later
-    ``connected_components`` calls until ITS OWN :meth:`release` (or a
-    bulk :func:`release_checkpoints`).  Idempotent; guarded by
-    SparkContext identity so a restarted context is never touched.
-    """
-
-    def __init__(self, sc, rdd_id: int | None):
-        self._sc, self._rid = sc, rdd_id
-        self.released = rdd_id is None
-
-    def release(self) -> None:
-        """Drop the checkpoint blocks NOW (the held frame becomes
-        unusable).  Safe to call more than once."""
-        if not self.released:
-            _unpersist_rdd_id(self._sc, self._rid)
-            self.released = True
-
-
-#: Live handles per SparkContext (identity-keyed: a parallel session or
-#: a restarted context must never release another context's blocks —
-#: checkpoint blocks have NO lineage, so a wrong release is
-#: unrecoverable).  Drained by :func:`release_checkpoints`; individual
-#: callers release via their own handle.
-_LIVE: dict[int, tuple[object, list[CheckpointHandle]]] = {}
-
-
-def _live_handles(sc) -> list[CheckpointHandle]:
-    """The live-handle list for exactly this context."""
-    entry = _LIVE.get(id(sc))
-    if entry is None or entry[0] is not sc:  # id() reuse after GC: reset
-        entry = (sc, [])
-        _LIVE[id(sc)] = entry
-    return entry[1]
-
-
-def release_checkpoints(spark) -> None:
-    """Release EVERY live ``connected_components`` checkpoint on this
-    session's context — the bulk form for benchmark/driver loops (the
-    ContextCleaner is too lazy there; without an eager release every
-    loop iteration pins one label generation).
-
-    After release the corresponding result frames are UNUSABLE —
-    ``localCheckpoint`` truncates lineage, so blocks cannot be
-    recomputed.  Results a caller wants to keep should be persisted
-    elsewhere first, or managed via their own handle
-    (``with_handle=True``) and simply not released.
-    """
-    sc = spark.sparkContext
-    handles = _live_handles(sc)
-    while handles:
-        handles.pop().release()
+from cryptocurrency_data_pipeline_spark.operators import caching
 
 
 def connected_components(
@@ -138,93 +38,82 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iters: int = 25,
-    with_handle: bool = False,
-):
+) -> DataFrame:
     """Label every node with the MIN node id reachable from it.
 
     ``edges`` is an undirected pair list (each pair listed once in either
     direction). Returns ``(node, cluster_id)`` for every node with at
-    least one edge — or ``(frame, handle)`` with ``with_handle=True``.
-    Deterministic for any input order.
+    least one edge. Deterministic for any input order.
 
     Lifetime contract: the returned frame is backed by the final round's
-    ``localCheckpoint`` blocks, owned by a :class:`CheckpointHandle`.
-    Superseded generations and the edge cache are released eagerly inside
-    the loop; the FINAL generation lives until the caller releases it —
-    via the returned handle (``with_handle=True``), a bulk
-    :func:`release_checkpoints`, or garbage collection.  A held result
+    ``localCheckpoint`` blocks, registered with :mod:`caching`.  The edge
+    caches and superseded generations are released inside the call —
+    on the failure path too; the FINAL generation lives until its owner
+    calls ``caching.release_all`` (or garbage collection).  A held result
     therefore stays queryable across any number of later
-    ``connected_components`` calls.
+    ``connected_components`` calls, and is unusable after that release.
     """
     # Persist the input projection BEFORE symmetrizing (r15): the union
     # references it on both sides, so an expensive upstream edge
     # pipeline (dup_clusters feeds the MinHash candidate+verify chain
     # here) would otherwise evaluate twice inside e's materialization.
-    p = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).persist()
-    e = p.unionByName(p.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    p = caching.persist(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
     # No distinct() on the symmetrized edges: the per-round min-aggregation
     # is idempotent under duplicate edges, so deduping here would spend a
     # full edge shuffle to save nothing downstream.
-    e = e.persist()
-
-    sc = edges.sparkSession.sparkContext
-
-    labels = e.select(F.col("a").alias("node")).distinct().withColumn(
-        "label", F.col("node")
+    e = caching.persist(
+        p.unionByName(p.select(F.col("b").alias("a"), F.col("a").alias("b")))
     )
-    # Lazy for the same one-job-per-generation reason as the loop below:
-    # the seed fingerprint materializes the checkpoint.
-    labels = labels.localCheckpoint(eager=False)
-    owned = _checkpoint_rdd_id(labels)
-    # Convergence fingerprint: sum of per-row label HASHES in
-    # decimal(38,0) — type-agnostic (string/hash node ids crash a plain
-    # sum with CAST_INVALID_INPUT, and snowflake-scale long ids overflow
-    # int64 under ANSI) and overflow-proof.  xxhash64 hashes the native
-    # type directly (no string cast: fingerprints are only ever compared
-    # across iterations of the same column).  Min-label propagation is
-    # monotone, so an unchanged multiset fingerprint means unchanged
-    # labels (the _partition_fingerprints argument).
-    label_fp = F.sum(F.xxhash64(F.col("label")).cast("decimal(38,0)"))
-    prev_sum = labels.agg(label_fp).first()[0]
-
-    for _ in range(max_iters):
-        nbr = (
-            e.join(labels, e.b == labels.node)
-            .select(e.a.alias("node"), "label")
+    try:
+        labels = e.select(F.col("a").alias("node")).distinct().withColumn(
+            "label", F.col("node")
         )
-        # LAZY checkpoint: the convergence aggregate right below is the
-        # materializing action, so each round runs ONE job (propagate +
-        # checkpoint + fingerprint) instead of two (eager checkpoint,
-        # then a separate fingerprint scan of the fresh blocks) — the
-        # per-round driver overhead was half the loop's cost at bench
-        # scale.  The aggregate reads every partition, so the blocks are
-        # fully populated before the next round references them.
-        new_labels = (
-            labels.unionByName(nbr)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=False)
-        )
-        new_sum = new_labels.agg(label_fp).first()[0]
-        # New generation is materialized; the previous round's checkpoint
-        # blocks are dead weight from here on — release them eagerly.
-        _unpersist_rdd_id(sc, owned)
-        owned = _checkpoint_rdd_id(new_labels)
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
+        # Lazy for the same one-job-per-generation reason as the loop
+        # below: the seed fingerprint materializes the checkpoint.
+        labels = caching.checkpoint(labels)
+        # Convergence fingerprint: sum of per-row label HASHES in
+        # decimal(38,0) — type-agnostic (string/hash node ids crash a
+        # plain sum with CAST_INVALID_INPUT, and snowflake-scale long ids
+        # overflow int64 under ANSI) and overflow-proof.  xxhash64 hashes
+        # the native type directly (no string cast: fingerprints are only
+        # ever compared across iterations of the same column).  Min-label
+        # propagation is monotone, so an unchanged multiset fingerprint
+        # means unchanged labels (the _partition_fingerprints argument).
+        label_fp = F.sum(F.xxhash64(F.col("label")).cast("decimal(38,0)"))
+        prev_sum = labels.agg(label_fp).first()[0]
 
-    e.unpersist()
-    p.unpersist()
-    handle = CheckpointHandle(sc, owned)
-    live = _live_handles(sc)
-    live[:] = [h for h in live if not h.released]  # prune self-released
-    live.append(handle)
-    result = labels.select("node", F.col("label").alias("cluster_id"))
-    if with_handle:
-        return result, handle
-    return result
+        for _ in range(max_iters):
+            nbr = (
+                e.join(labels, e.b == labels.node)
+                .select(e.a.alias("node"), "label")
+            )
+            # LAZY checkpoint: the convergence aggregate right below is
+            # the materializing action, so each round runs ONE job
+            # (propagate + checkpoint + fingerprint) instead of two (eager
+            # checkpoint, then a separate fingerprint scan of the fresh
+            # blocks) — the per-round driver overhead was half the loop's
+            # cost at bench scale.  The aggregate reads every partition,
+            # so the blocks are fully populated before the next round
+            # references them.
+            new_labels = caching.checkpoint(
+                labels.unionByName(nbr)
+                .groupBy("node")
+                .agg(F.min("label").alias("label"))
+            )
+            new_sum = new_labels.agg(label_fp).first()[0]
+            # New generation is materialized; the previous round's
+            # checkpoint blocks are dead weight from here on — release
+            # them eagerly (the block manager stays flat at two label
+            # generations regardless of round count).
+            caching.release(labels)
+            labels = new_labels
+            if new_sum == prev_sum:
+                break
+            prev_sum = new_sum
+    finally:
+        caching.release(e)
+        caching.release(p)
+    return labels.select("node", F.col("label").alias("cluster_id"))
 
 
 def pagerank(
@@ -250,16 +139,12 @@ def pagerank(
     special term; the (1-d)/N base is applied through a left join on the
     full node set. N enters as a 1-row broadcast, never a collect.
     """
-    from cryptocurrency_data_pipeline_spark.operators.caching import track
-
     # Persist the input projection BEFORE symmetrizing (r15): the union
     # references it on both sides, so an expensive upstream edge
     # pipeline (the doc-graph queries feed the MinHash candidate+verify
     # chain here) would otherwise evaluate twice inside e's
     # materialization.
-    p = track(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).persist()
-    )
+    p = caching.persist(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
     # Persist the shared frames: e feeds every iteration's contribution
     # join and nodes/deg; without the cache each of the unrolled
     # iterations re-embeds (and re-computes) the whole symmetrize +
@@ -268,19 +153,17 @@ def pagerank(
     # every action.  persist() keeps lineage, so the caller's single
     # action populates the caches mid-plan and every later reference is
     # an InMemoryRelation read (the jaccard_self_join discipline);
-    # track() lets benchmark loops release the blocks eagerly.
-    e = track(
+    # registered so benchmark loops can release the blocks eagerly.
+    e = caching.persist(
         p.unionByName(p.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
-        .persist()
     )
 
-    nodes = track(e.select(F.col("a").alias("node")).distinct().persist())
+    nodes = caching.persist(e.select(F.col("a").alias("node")).distinct())
     n_count = nodes.agg(F.count(F.lit(1)).alias("n"))
-    deg = track(
+    deg = caching.persist(
         e.groupBy(F.col("a").alias("node"))
         .agg(F.count(F.lit(1)).alias("deg"))
-        .persist()
     )
 
     ranks = nodes.crossJoin(F.broadcast(n_count)).select(
@@ -326,28 +209,24 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     O(sqrt(m)), the pair blow-up a plain id orientation would hit on a
     star graph never materializes, and every join stays an equi-join.
     """
-    from cryptocurrency_data_pipeline_spark.operators.caching import track
-
     # Persist the shared frames: e feeds deg (twice), the orientation
     # join and the edge count; o feeds both wedge sides and the closing
     # join.  Uncached, every reference re-embeds the canonicalize +
     # distinct subtree (the r14 before-plan carried 184 Exchange nodes);
     # cached, each is one InMemoryRelation read inside the caller's
-    # single action.  track() gives loops the eager-release hook.
-    e = track(
+    # single action.  The registry gives loops the eager-release hook.
+    e = caching.persist(
         edges.select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
-        .persist()
     )
-    deg = track(
+    deg = caching.persist(
         e.select(F.col("a").alias("node"))
         .unionAll(e.select(F.col("b").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("deg"))
-        .persist()
     )
     # Orient each edge toward the higher (deg, node) endpoint.
     ed = (
@@ -355,12 +234,12 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
         .join(deg.select(F.col("node").alias("b"), F.col("deg").alias("db")), "b")
     )
     fwd = F.struct("da", "a") < F.struct("db", "b")
-    o = track(
+    o = caching.persist(
         ed.select(
             F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("u"),
             F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("v"),
             F.when(fwd, F.col("db")).otherwise(F.col("da")).alias("dv"),
-        ).persist()
+        )
     )
     # Wedges at u: ordered out-neighbor pairs; closed by an oriented
     # (v, w) edge (orientation consistent because rank(v) < rank(w)).

@@ -40,7 +40,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cryptocurrency_data_pipeline_spark.operators.caching import track
+from cryptocurrency_data_pipeline_spark.operators import caching
 
 
 def with_consecutive_ids(
@@ -59,13 +59,12 @@ def with_consecutive_ids(
     # (and the second pass reads cache instead of rescanning the table —
     # the same materialization RDD.zipWithIndex pays). The cache spills to
     # disk at scale and is released by the ContextCleaner when the result
-    # is garbage-collected; callers that loop should unpersist explicitly.
-    parts = track(
+    # is garbage-collected; callers that loop call caching.release_all.
+    parts = caching.persist(
         df.repartitionByRange(*[F.col(c) for c in order_cols])
         .sortWithinPartitions(*order_cols)
         .withColumn("__mid", F.monotonically_increasing_id())
         .withColumn("__pid", F.spark_partition_id())
-        .persist()
     )
     stats = parts.groupBy("__pid").agg(
         F.count(F.lit(1)).alias("__n"), F.min("__mid").alias("__mid0")
@@ -121,12 +120,11 @@ def with_grouped_ranks(
     window is already balanced and should be used instead.
     """
     keys = [*group_cols, *order_cols]
-    parts = track(
+    parts = caching.persist(
         df.repartitionByRange(*[F.col(c) for c in keys])
         .sortWithinPartitions(*keys)
         .withColumn("__mid", F.monotonically_increasing_id())
         .withColumn("__pid", F.spark_partition_id())
-        .persist()
     )
     stats = parts.groupBy("__pid", *group_cols).agg(
         F.count(F.lit(1)).alias("__n"), F.min("__mid").alias("__mid0")

@@ -1,4 +1,4 @@
-"""Join operators beyond plain equi-joins: as-of and range joins.
+"""Join operators beyond plain equi-joins: the as-of join.
 
 The reference implements no true joins (SURVEY §2.3) — its star schema
 exists to be queried.  These are the time-series lookups that consumption
@@ -9,16 +9,18 @@ implies (last-known-price style), built scale-first:
   ONE shuffle on the key, no per-key range explosion: at 100 TB this beats
   the naive equi-join + range-filter + argmax (quadratic per key) by
   construction.
-* **range join**: equi-join on the key with an interval predicate; Spark
-  plans the equi part as a hash/SMJ join and applies the interval as a
-  post-join filter, so the blow-up is bounded by the key cardinality.
+
+A range (theta) join needs no operator: an equi-join whose condition also
+carries the interval predicate (query ``range_join_conversions``) plans
+the equi part as a hash/SMJ join and applies the interval as a post-join
+filter, so the blow-up is bounded by the key cardinality.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -101,16 +103,3 @@ def asof_join(
             for o in out_cols
         ],
     )
-
-
-def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str | Sequence[str],
-    condition: Column,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join on ``key`` plus an arbitrary interval/theta ``condition``."""
-    keys = [key] if isinstance(key, str) else list(key)
-    on = [left[k] == right[k] for k in keys]
-    return left.join(right, on + [condition], how)

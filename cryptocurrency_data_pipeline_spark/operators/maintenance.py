@@ -20,6 +20,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from cryptocurrency_data_pipeline_spark.operators import caching
+
 
 def _dir_bytes(path: str) -> int:
     total = 0
@@ -1304,7 +1306,7 @@ def merge_into_snapshot(
     )
     # One materialization of the merge serves the fingerprint pre-scan
     # (or the write) and whatever runs second.
-    merged = merged.persist()
+    merged = caching.persist(merged)
     try:
         # Partitions whose content is now empty must be DROPPED, not
         # inherited unchanged — resolved INSIDE upsert_snapshot against
@@ -1320,7 +1322,7 @@ def merge_into_snapshot(
             drop_if_absent=sorted(touched),
         )
     finally:
-        merged.unpersist()
+        caching.release(merged)
 
 
 def compact_snapshot_partition(

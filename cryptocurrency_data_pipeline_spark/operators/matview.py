@@ -31,6 +31,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cryptocurrency_data_pipeline_spark.operators import caching
+
 PARTIAL_COLS = ["n_rows", "sum_cents", "min_value", "max_value", "distinct_sketch"]
 
 
@@ -398,7 +400,7 @@ def upsert_partition(
     # The fresh aggregation feeds TWO plan branches below (the touched
     # broadcast and the union) — persist it so the most expensive stage
     # (raw-row aggregation) runs once, not twice.
-    fresh = fresh.persist()
+    fresh = caching.persist(fresh)
     try:
         if not _os.path.exists(path):
             return _overwrite_partitions(spark, fresh, path, part_col)
@@ -431,7 +433,7 @@ def upsert_partition(
         )
         return _overwrite_partitions(spark, folded, path, part_col)
     finally:
-        fresh.unpersist()
+        caching.release(fresh)
 
 
 def _overwrite_partitions(
@@ -445,7 +447,10 @@ def _overwrite_partitions(
     # overwrites (upsert), and the post-write partition count must not
     # re-run the whole build (refresh).  Eager + partials-sized — bounded
     # by partitions × keys.
-    partials = partials.localCheckpoint(eager=True)
-    with dynamic_partition_overwrite(spark):
-        partials.write.mode("overwrite").partitionBy(part_col).parquet(path)
-    return partials.select(part_col).distinct().count()
+    partials = caching.checkpoint(partials, eager=True)
+    try:
+        with dynamic_partition_overwrite(spark):
+            partials.write.mode("overwrite").partitionBy(part_col).parquet(path)
+        return partials.select(part_col).distinct().count()
+    finally:
+        caching.release(partials)

@@ -51,7 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cryptocurrency_data_pipeline_spark.operators.caching import track
+from cryptocurrency_data_pipeline_spark.operators import caching
 from cryptocurrency_data_pipeline_spark.operators.clustering import (
     assign_clusters_auto,
 )
@@ -90,7 +90,7 @@ def _normalized_assignment(
     normalization, persisted for multi-consumer reuse.  Norm lives in its
     OWN column first — inside the transform lambda it would re-fold the
     whole vector once per element (O(dim^2)/row).  The persist is
-    registered with ``caching.track`` so composed plans / loops can
+    registered with :mod:`caching` so composed plans / loops can
     release it eagerly after their terminal action.
 
     Zero-norm guard: an all-zero embedding (they DO occur at corpus
@@ -105,7 +105,7 @@ def _normalized_assignment(
     auto-scaled cluster count (``auto_nlist``, uncapped since r14)
     keeps the pair space linear at ANY corpus size instead of
     re-quadratizing past ~65k vectors."""
-    return track(
+    return caching.persist(
         assign_clusters_auto(corpus, centers, id_col=id_col, vec_col=vec_col)
         .withColumn("__norm", norm(F.col(vec_col)))
         .withColumn(
@@ -117,7 +117,6 @@ def _normalized_assignment(
             ),
         )
         .select(id_col, "cluster_id", "__nv")
-        .persist()
     )
 
 

@@ -52,7 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cryptocurrency_data_pipeline_spark.operators.caching import track
+from cryptocurrency_data_pipeline_spark.operators import caching
 from cryptocurrency_data_pipeline_spark.operators.ids import (
     with_consecutive_ids,
 )
@@ -91,15 +91,14 @@ def jaccard_self_join(
     # showed the groupBy(id) exchange moving 158 MB of shingle text per
     # pass at sf0.1 (ints: ~15 MB) and 20 s of task CPU sorting string
     # structs (guide §2.3: shuffle fewer bytes / narrower types).
-    tok = track(tok.persist())
+    tok = caching.persist(tok)
     df_e = tok.groupBy("elem").agg(F.count_distinct(F.col("id")).alias("df"))
     ranked = with_consecutive_ids(df_e, ["df", "elem"], "rk")
     te = tok.join(ranked.select("elem", "rk"), "elem")
-    docs = track(
+    docs = caching.persist(
         te.groupBy("id")
         .agg(F.array_sort(F.collect_set("rk")).alias("ordered"))
         .select("id", F.size("ordered").alias("sz"), "ordered")
-        .persist()
     )
     # prefix length p = sz - ceil(t * sz) + 1 (integer ceil).
     ceil_t = F.floor((F.col("sz") * num + (den - 1)) / den).cast("int")
@@ -220,15 +219,14 @@ def containment_join(
     # Same int-rank discipline as :func:`jaccard_self_join`: one df pass,
     # a bijective dense (df, elem) rank, and every downstream shuffle
     # carries longs instead of element strings.
-    tok = track(tok.persist())
+    tok = caching.persist(tok)
     df_e = tok.groupBy("elem").agg(F.count_distinct(F.col("id")).alias("df"))
     ranked = with_consecutive_ids(df_e, ["df", "elem"], "rk")
     te = tok.join(ranked.select("elem", "rk"), "elem")
-    docs = track(
+    docs = caching.persist(
         te.groupBy("id")
         .agg(F.array_sort(F.collect_set("rk")).alias("ordered"))
         .select("id", F.size("ordered").alias("sz"), "ordered")
-        .persist()
     )
     ceil_t = F.floor((F.col("sz") * num + (den - 1)) / den).cast("int")
     a = docs.select(

@@ -143,6 +143,29 @@ def salted_join(
     return out.drop("__salt")
 
 
+def _has_exchange(plan) -> bool:
+    """Does the JVM physical ``plan`` contain a shuffle or broadcast
+    exchange (reused or not) or an AQE shuffle read?
+
+    Walks node CLASSES through AQE wrappers, query stages, cached
+    relations and subqueries — every place whose execution would run a
+    job.  A substring test on the plan text also fired on any column or
+    path named ``exchange``."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name.endswith("ExchangeExec") or name == "AQEShuffleReadExec":
+            return True
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        for nodes in (node.children(), node.innerChildren()):
+            stack.extend(nodes.apply(i) for i in range(nodes.size()))
+    return False
+
+
 def spread_small_scan(df: DataFrame) -> DataFrame:
     """Round-robin-repartition ``df`` UP to the cluster's default
     parallelism when its plan has fewer partitions — the guide's
@@ -179,7 +202,7 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
         return df
     p = df.sparkSession.sparkContext.defaultParallelism
     plan = df._jdf.queryExecution().executedPlan()
-    if "exchange" in plan.toString().lower():
+    if _has_exchange(plan):
         return df
     if plan.execute().getNumPartitions() < p:
         return df.repartition(p)

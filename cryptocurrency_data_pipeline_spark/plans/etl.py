@@ -22,7 +22,7 @@ from dataclasses import dataclass
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from cryptocurrency_data_pipeline_spark.operators import gold, quality, silver
+from cryptocurrency_data_pipeline_spark.operators import caching, gold, quality, silver
 from cryptocurrency_data_pipeline_spark.plans.runner import SKIP, Pipeline
 from cryptocurrency_data_pipeline_spark.schemas import REQUIRED_FIELDS
 from cryptocurrency_data_pipeline_spark.sources import ingestion
@@ -85,7 +85,7 @@ def transform_stage(spark: SparkSession, paths: EtlPaths):
         # unpersisted, the text scan + from_json would run twice and a
         # file landing between the two actions could split a batch
         # inconsistently across them.
-        df = df.persist()
+        df = caching.persist(df)
         try:
             corrupt = df.filter(F.col("_corrupt_record").isNotNull()).select(
                 F.col("_raw").alias("raw_data"),
@@ -136,7 +136,7 @@ def transform_stage(spark: SparkSession, paths: EtlPaths):
             ).parquet(paths.metrics)
             return paths.silver
         finally:
-            df.unpersist()
+            caching.release(df)
 
     return stage
 
@@ -286,30 +286,32 @@ def replay_dlq(
     valid, still_bad = silver.enforce_schema_split(
         reparsed, req, raw_col="raw_data"
     )
-    valid = valid.persist()
-    n_recovered = valid.count()
-    if n_recovered:
-        out = (
-            silver.project_cast(valid, SILVER_SPEC)
-            .withColumn("update_date", F.current_date())
-            .withColumn("last_updated_ts", F.current_timestamp())
-        )
-        (
-            out.write.mode("append")
-            .option("compression", "snappy")
-            .partitionBy("update_date")
-            .parquet(paths.silver)
-        )
-        # Re-land the recovered raw lines in bronze (see docstring).
-        (
-            envelopes.select("raw_data")
-            .exceptAll(still_bad.select("raw_data"))
-            .select(F.col("raw_data").alias("value"))
-            .coalesce(1)
-            .write.mode("append")
-            .text(paths.bronze)
-        )
-    valid.unpersist()
+    valid = caching.persist(valid)
+    try:
+        n_recovered = valid.count()
+        if n_recovered:
+            out = (
+                silver.project_cast(valid, SILVER_SPEC)
+                .withColumn("update_date", F.current_date())
+                .withColumn("last_updated_ts", F.current_timestamp())
+            )
+            (
+                out.write.mode("append")
+                .option("compression", "snappy")
+                .partitionBy("update_date")
+                .parquet(paths.silver)
+            )
+            # Re-land the recovered raw lines in bronze (see docstring).
+            (
+                envelopes.select("raw_data")
+                .exceptAll(still_bad.select("raw_data"))
+                .select(F.col("raw_data").alias("value"))
+                .coalesce(1)
+                .write.mode("append")
+                .text(paths.bronze)
+            )
+    finally:
+        caching.release(valid)
 
     # Rewrite the DLQ with only the still-failing envelopes.  The source
     # and destination are the same directory, so materialize through a

@@ -65,11 +65,12 @@ class Pipeline:
             self.notifier(event)
 
     def run(self, initial: Any = None) -> list[StageResult]:
-        # Composed stages invoke operators that persist() multi-consumer
-        # intermediates (MinHash shingles, SemDeDup assignments, ...).
-        # Release them when the plan ends — success, skip, or failure —
-        # so long-lived pipeline processes keep the block manager flat
-        # (operators/caching.py; safe: persist keeps lineage).
+        # Composed stages invoke operators that persist (MinHash
+        # shingles, SemDeDup assignments, ...) or checkpoint (connected
+        # components) intermediates.  Release them when the plan ends —
+        # success, skip, or failure — so long-lived pipeline processes
+        # keep the block manager flat (operators/caching.py).  No stage
+        # output is checkpoint-backed, so every result stays usable.
         from cryptocurrency_data_pipeline_spark.operators.caching import (
             release_all,
         )

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
 from cryptocurrency_data_pipeline_spark.operators import silver  # noqa: F401
-from cryptocurrency_data_pipeline_spark.operators.caching import track  # noqa: F401
+from cryptocurrency_data_pipeline_spark.operators import caching  # noqa: F401
 from cryptocurrency_data_pipeline_spark.operators.quantize import cents, finite  # noqa: F401
 from cryptocurrency_data_pipeline_spark.queries._fragments import (  # noqa: F401
     cents_sql,
@@ -655,8 +655,6 @@ def asof_last_view(spark, sf_dir):
     """,
 )
 def range_join_conversions(spark, sf_dir):
-    from cryptocurrency_data_pipeline_spark.operators import joins
-
     ev = t(spark, sf_dir, "events")
     p = ev.filter(F.col("event_type") == "purchase").select("user_id", F.col("ts").alias("p_ts"))
     v = ev.filter(F.col("event_type") == "view").select(
@@ -820,10 +818,9 @@ def winnow_near_dups(spark, sf_dir):
     # Persist: both join branches read the fingerprint set, so the UDF pass
     # runs once (same pattern as the shingle frame in minhash_near_dups; at
     # scale, MEMORY_AND_DISK instead of recomputing the corpus pass twice).
-    fps = track(
+    fps = caching.persist(
         textops.winnow_fingerprints(docs, "text", k=25, w=8)
         .select("doc_id", F.explode("fingerprints").alias("fp"))
-        .persist()
     )
     a = fps.select(F.col("doc_id").alias("a_id"), "fp")
     b = fps.select(F.col("doc_id").alias("b_id"), "fp")
@@ -2109,7 +2106,7 @@ def tfidf_top_term_per_doc(spark, sf_dir):
     # Persisted: tfidf references the (doc, token) counts on both the
     # vocab side and the scoring join — uncached the tokenize explode
     # and its groupBy ran twice per action.
-    counts = track(text.term_doc_counts(docs).persist())
+    counts = caching.persist(text.term_doc_counts(docs))
     n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = text.tfidf(counts, n_docs)
     w = Window.partitionBy("doc_id").orderBy(

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
 from cryptocurrency_data_pipeline_spark.operators import silver  # noqa: F401
-from cryptocurrency_data_pipeline_spark.operators.caching import track  # noqa: F401
+from cryptocurrency_data_pipeline_spark.operators import caching  # noqa: F401
 from cryptocurrency_data_pipeline_spark.operators.quantize import cents, finite  # noqa: F401
 from cryptocurrency_data_pipeline_spark.queries._fragments import (  # noqa: F401
     cents_sql,
@@ -75,13 +75,12 @@ def bigram_logprob_docs(spark, sf_dir):
     # Persisted: the bigram frame feeds BOTH count sides and the scoring
     # join — uncached, the tokenize+shingle explode ran three times per
     # action.
-    b = track(
+    b = caching.persist(
         docs.select(
             "doc_id",
             F.explode(text.shingles(n=2, toks=F.col("__toks"))).alias("bg"),
         )
         .withColumn("w1", F.substring_index("bg", " ", 1))
-        .persist()
     )
     cb = b.groupBy("bg").agg(F.count(F.lit(1)).alias("cb"))
     cu = b.groupBy("w1").agg(F.count(F.lit(1)).alias("cu"))
@@ -1548,11 +1547,11 @@ def simhash_recall(spark, sf_dir):
     docs = t(spark, sf_dir, "documents")
     # Persist: the Arrow-batched UDF runs once, both self-join sides and
     # the truth join read the materialized signatures.
-    sigs = track(
+    sigs = caching.persist(
         docs.select(
             "doc_id",
             F.coalesce(dedup.simhash64(F.col("text")), F.lit(0)).alias("simhash"),
-        ).persist()
+        )
     )
     banded = sigs.select(
         "doc_id",

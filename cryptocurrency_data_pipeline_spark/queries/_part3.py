@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
 from cryptocurrency_data_pipeline_spark.operators import silver  # noqa: F401
-from cryptocurrency_data_pipeline_spark.operators.caching import track  # noqa: F401
+from cryptocurrency_data_pipeline_spark.operators import caching  # noqa: F401
 from cryptocurrency_data_pipeline_spark.queries._fragments import (  # noqa: F401
     minhash_sig_ctes,
 )
@@ -1212,7 +1212,7 @@ def lsh_band_tuning(spark, sf_dir):
     from cryptocurrency_data_pipeline_spark.operators import dedup
 
     docs = t(spark, sf_dir, "documents")
-    sh = track(dedup._shingle_frame(docs, "text", "doc_id", 3).persist())
+    sh = caching.persist(dedup._shingle_frame(docs, "text", "doc_id", 3))
     sig = sh.select("id", dedup.minhash_signature(F.col("hashes")).alias("sig"))
 
     banded = None
@@ -1929,7 +1929,7 @@ def pq_adc_topk_query(spark, sf_dir):
     from cryptocurrency_data_pipeline_spark.operators import pq
 
     emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    sub = track(pq._subvectors(emb, 8, 8, "vec_id", "embedding").persist())
+    sub = caching.persist(pq._subvectors(emb, 8, 8, "vec_id", "embedding"))
     cb = pq.train_codebook(emb, sub=sub)
     codes = pq.pq_encode(emb, cb, sub=sub)
     probes = emb.filter(F.col("vec_id") < 3)
@@ -2008,7 +2008,7 @@ def pq_recall_at_10(spark, sf_dir):
     from cryptocurrency_data_pipeline_spark.operators import pq
 
     emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    sub = track(pq._subvectors(emb, 8, 8, "vec_id", "embedding").persist())
+    sub = caching.persist(pq._subvectors(emb, 8, 8, "vec_id", "embedding"))
     cb = pq.train_codebook(emb, sub=sub)
     codes = pq.pq_encode(emb, cb, sub=sub)
     probes = emb.filter(F.col("vec_id") < 3)
@@ -2096,7 +2096,7 @@ def ivfpq_topk(spark, sf_dir):
     )
 
     emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    sub = track(pq._subvectors(emb, 8, 8, "vec_id", "embedding").persist())
+    sub = caching.persist(pq._subvectors(emb, 8, 8, "vec_id", "embedding"))
     cb = pq.train_codebook(emb, sub=sub)
     codes = pq.pq_encode(emb, cb, sub=sub)
     probes = emb.filter(F.col("vec_id") < 3)
@@ -2278,10 +2278,9 @@ def vocab_oov_coverage(spark, sf_dir):
     """Per-source OOV rate against the corpus's own top-20 vocabulary."""
     from cryptocurrency_data_pipeline_spark.operators.text import tokens
 
-    toks = track(
+    toks = caching.persist(
         t(spark, sf_dir, "documents")
         .select("source", F.explode(tokens("text")).alias("tok"))
-        .persist()
     )
     vocab = (
         toks.groupBy("tok")

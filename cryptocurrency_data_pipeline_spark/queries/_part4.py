@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
 from cryptocurrency_data_pipeline_spark.operators import silver  # noqa: F401
-from cryptocurrency_data_pipeline_spark.operators.caching import track  # noqa: F401
+from cryptocurrency_data_pipeline_spark.operators import caching  # noqa: F401
 from cryptocurrency_data_pipeline_spark.operators.quantize import cents, epoch_sec, finite  # noqa: F401
 from cryptocurrency_data_pipeline_spark.queries._fragments import cents_sql, epoch_sec_sql  # noqa: F401
 from cryptocurrency_data_pipeline_spark.queries._registry import query, t  # noqa: F401
@@ -365,7 +365,7 @@ def hashed_vector_topk(spark, sf_dir):
     )
 
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    vecs = track(hashed_doc_vectors(docs, dim=64).persist())
+    vecs = caching.persist(hashed_doc_vectors(docs, dim=64))
     probes = vecs.filter(F.col("doc_id") < 3)
     return cosine_topk(vecs, probes, k=10, id_col="doc_id")
 
@@ -447,7 +447,7 @@ def ts_paa_similarity_topk(spark, sf_dir):
         "user_id",
         T.paa(F.col("z"), F.col("n"), 8).alias("sketch"),
     )
-    sk = track(sk.persist())
+    sk = caching.persist(sk)
     probes = sk.orderBy("user_id").limit(3)
     return T.paa_topk(sk, probes, k=5)
 

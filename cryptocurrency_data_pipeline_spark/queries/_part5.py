@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
 from cryptocurrency_data_pipeline_spark.operators import silver  # noqa: F401
-from cryptocurrency_data_pipeline_spark.operators.caching import track  # noqa: F401
+from cryptocurrency_data_pipeline_spark.operators import caching  # noqa: F401
 from cryptocurrency_data_pipeline_spark.operators.quantize import cents, epoch_sec, finite  # noqa: F401
 from cryptocurrency_data_pipeline_spark.queries._fragments import cents_sql, epoch_sec_sql, finite_sql  # noqa: F401
 from cryptocurrency_data_pipeline_spark.queries._registry import query, t  # noqa: F401
@@ -2322,7 +2322,7 @@ def stream_snapshot_sink_replay(spark, sf_dir):
     from cryptocurrency_data_pipeline_spark.operators import maintenance as mt
     from cryptocurrency_data_pipeline_spark.streaming import snapshot_sink
 
-    orders = (
+    orders = caching.persist(
         t(spark, sf_dir, "orders")
         .select("o_custkey", "o_orderkey", "o_orderdate", "o_orderpriority")
         # An eighth of customers: the cycle's semantics (seed, withdraw,
@@ -2334,7 +2334,6 @@ def stream_snapshot_sink_replay(spark, sf_dir):
         # One materialization feeds all four micro-batch derivations —
         # without it every cycle re-scans parquet and recomputes the
         # bucket hash (the fixture is driver-job-bound, not data-bound).
-        .persist()
     )
     table = os.path.join(
         tempfile.gettempdir(),
@@ -2378,7 +2377,7 @@ def stream_snapshot_sink_replay(spark, sf_dir):
         # zero-row local plan) — the fixture cache can go now.  In a
         # finally so a failed merge cycle or a tripped invariant cannot
         # leak the cached fixture into the rest of the session.
-        orders.unpersist()
+        caching.release(orders)
     return (
         cur
         .groupBy("o_orderpriority")

@@ -18,6 +18,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cryptocurrency_data_pipeline_spark.operators import caching
+
 #: Paths per anti-join chunk.  The walk streams; the driver holds at most
 #: one chunk of candidate paths plus the (bounded) fresh batch at a time,
 #: so a million-file backlog costs O(chunk + batch) driver memory, never
@@ -139,7 +141,7 @@ def new_files_batch(
         # parquet ~50 times per listing (ADVICE r13).  Cache it for the
         # loop — first chunk pays the scan, the rest read columnar cache
         # blocks — and release it before returning.
-        ledger = ledger.cache()
+        ledger = caching.persist(ledger)
 
     def fresh_of(chunk: list[str]) -> list[str]:
         if ledger is None:
@@ -169,7 +171,7 @@ def new_files_batch(
             fresh.extend(fresh_of(chunk))
     finally:
         if ledger is not None:
-            ledger.unpersist()
+            caching.release(ledger)
     has_more = len(fresh) > max_batch_files
     return fresh[:max_batch_files], has_more
 

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from cryptocurrency_data_pipeline_spark.operators import caching
+
 CORRUPT_COL = "_corrupt_record"
 
 
@@ -43,22 +45,18 @@ def read_csv_enforced(
     full = StructType(
         [*schema.fields, StructField(CORRUPT_COL, StringType(), True)]
     )
-    from cryptocurrency_data_pipeline_spark.operators.caching import track
-
     # The cache is load-bearing (filtering on the corrupt-record column
-    # requires materializing the permissive scan once); track it so
+    # requires materializing the permissive scan once); registered so
     # caching.release_all can reclaim the blocks eagerly — a loop over
     # CSV batches would otherwise accumulate full-scan-sized caches for
     # the session lifetime.
-    df = track(
-        (
-            spark.read.schema(full)
-            .option("header", str(header).lower())
-            .option("sep", sep)
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", CORRUPT_COL)
-            .csv(path)
-        ).cache()
+    df = caching.persist(
+        spark.read.schema(full)
+        .option("header", str(header).lower())
+        .option("sep", sep)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", CORRUPT_COL)
+        .csv(path)
     )
     bad = F.col(CORRUPT_COL).isNotNull()
     valid = df.filter(~bad).drop(CORRUPT_COL)

@@ -34,6 +34,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cryptocurrency_data_pipeline_spark.operators import caching
+
 
 def shard_assignment(id_col: str, n_shards: int):
     """Deterministic shard id in [0, n_shards): md5-hash bucket of the id."""
@@ -88,38 +90,37 @@ def write_training_shards(
     # subtree independently (a second 100 TB scan, and with any
     # nondeterminism in the lineage the manifest could describe
     # different rows than the parquet actually written).
-    from cryptocurrency_data_pipeline_spark.operators.caching import track
-
-    sharded = track(
-        df.withColumn("shard", shard_assignment(id_col, n_shards)).persist()
+    sharded = caching.persist(
+        df.withColumn("shard", shard_assignment(id_col, n_shards))
     )
-
-    stats = (
-        sharded.groupBy(split_col, "shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            (
-                F.sum(token_col) if token_col else F.lit(None).cast("long")
-            ).alias("n_tokens"),
-            F.min(id_col).alias("min_id"),
-            F.max(id_col).alias("max_id"),
+    try:
+        stats = (
+            sharded.groupBy(split_col, "shard")
+            .agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                (
+                    F.sum(token_col) if token_col else F.lit(None).cast("long")
+                ).alias("n_tokens"),
+                F.min(id_col).alias("min_id"),
+                F.max(id_col).alias("max_id"),
+            )
+            .collect()
         )
-        .collect()
-    )
 
-    (
-        # The partition columns LEAD the explicit sort: the dynamic
-        # partition write requires child ordering by (split, shard), and
-        # an order-cols-only sort would make FileFormatWriter insert its
-        # own (not-stable-under-spill) sort on top — wasting this one
-        # and voiding the deterministic in-file row order contract.
-        sharded.repartition(F.col(split_col), F.col("shard"))
-        .sortWithinPartitions(split_col, "shard", *order)
-        .write.mode("overwrite")
-        .partitionBy(split_col, "shard")
-        .parquet(path)
-    )
-    sharded.unpersist(False)
+        (
+            # The partition columns LEAD the explicit sort: the dynamic
+            # partition write requires child ordering by (split, shard), and
+            # an order-cols-only sort would make FileFormatWriter insert its
+            # own (not-stable-under-spill) sort on top — wasting this one
+            # and voiding the deterministic in-file row order contract.
+            sharded.repartition(F.col(split_col), F.col("shard"))
+            .sortWithinPartitions(split_col, "shard", *order)
+            .write.mode("overwrite")
+            .partitionBy(split_col, "shard")
+            .parquet(path)
+        )
+    finally:
+        caching.release(sharded)
 
     manifest = {
         "n_shards": n_shards,

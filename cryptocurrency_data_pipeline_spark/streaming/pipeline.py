@@ -35,7 +35,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cryptocurrency_data_pipeline_spark.operators import silver
+from cryptocurrency_data_pipeline_spark.operators import caching, silver
 from cryptocurrency_data_pipeline_spark.schemas import STREAM_TICK
 
 
@@ -216,7 +216,7 @@ def split_micro_batch(batch: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame
 def process_micro_batch(batch: DataFrame, epoch_id: int, sinks: StreamSinks) -> None:
     """foreachBatch body: cache once, 4 bulk writes (replaces the
     reference's per-record put_item / send_message / publish loops)."""
-    batch.persist()
+    caching.persist(batch)
     try:
         good, bad, alert, corrupt = split_micro_batch(batch)
         (
@@ -241,7 +241,7 @@ def process_micro_batch(batch: DataFrame, epoch_id: int, sinks: StreamSinks) -> 
         alert_rows.write.mode("append").json(sinks.alert)
         corrupt.write.mode("append").json(sinks.corrupt)
     finally:
-        batch.unpersist()
+        caching.release(batch)
 
 
 def enrich_with_dim(
@@ -291,7 +291,7 @@ def _write_epoch_partitioned_sinks(
     batch: DataFrame, epoch_id: int, sinks: StreamSinks
 ) -> None:
     batch = batch.withColumn("epoch", F.lit(epoch_id).cast("long"))
-    batch.persist()
+    caching.persist(batch)
     try:
         good, bad, alert, corrupt = split_micro_batch(batch)
         (
@@ -326,7 +326,7 @@ def _write_epoch_partitioned_sinks(
             .json(sinks.corrupt)
         )
     finally:
-        batch.unpersist()
+        caching.release(batch)
 
 
 def run_validation_pipeline(

@@ -47,17 +47,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cryptocurrency_data_pipeline_spark.operators import maintenance, silver
-
-
-#: Cache the touched-partition current read across its two per-batch
-#: consumers (late-data guard + merge survivors)?  Measured OFF (r15,
-#: interleaved hermetic A/B on the replay fixture: min 4.66 s unpersisted
-#: vs 5.31 s persisted): the cache write + its extra AQE stage-jobs cost
-#: more than recomputing a partition-pruned parquet scan; the shared
-#: frame is still INJECTED into merge_into_snapshot so the manifest
-#: load + union assembly happens once per cycle either way.
-_PERSIST_CURRENT = False
+from cryptocurrency_data_pipeline_spark.operators import caching, maintenance, silver
 
 
 def key_bucket(keys: Sequence[str], n_buckets: int = 16):
@@ -161,8 +151,7 @@ def merge_batch_into_snapshot(
     if stats_out is not None:
         stats_out["null_order_dropped"] = n_null_order
     batch = batch.filter(F.col(order_col).isNotNull())
-    latest = silver.dedup_latest(batch, keys, order_col, tiebreak).persist()
-    current = None
+    latest = caching.persist(silver.dedup_latest(batch, keys, order_col, tiebreak))
     try:
         if counts["n_valid"] == 0:
             man = maintenance._load_manifest(table_path)
@@ -181,18 +170,18 @@ def merge_batch_into_snapshot(
                 f"— rebuild the table to migrate"
             )
         spark = latest.sparkSession
-        # ONE assembled current-version read per merge cycle (r15): the
-        # late-data guard's `stored` projection and the merge's
-        # `existing` side both scan it — persisted here, injected into
-        # merge_into_snapshot via `current=`, released in the finally.
-        # Pruned to the TOUCHED partitions BEFORE the persist: caching
-        # the unfiltered read would materialize the whole table and
-        # defeat the partition-pruned scan this sink exists for.
+        # ONE assembled current-version read per merge cycle (r15),
+        # pruned to the TOUCHED partitions: the late-data guard's
+        # `stored` projection and the merge's `existing` side both scan
+        # it, and it is injected into merge_into_snapshot via
+        # `current=` so the manifest load + union assembly happens once
+        # per cycle.  Deliberately NOT persisted (r15 interleaved
+        # hermetic A/B on the replay fixture: min 4.66 s unpersisted vs
+        # 5.31 s persisted): the cache write + its extra AQE stage-jobs
+        # cost more than recomputing a partition-pruned parquet scan.
         current = maintenance.read_snapshot(spark, table_path).where(
             maintenance.partition_predicate(part_col, touched)
         )
-        if _PERSIST_CURRENT:
-            current = current.persist()
         # Dtype-drift guard FIRST (pure metadata — no executor work
         # before failing fast): xxhash64 is TYPE-sensitive (the same
         # numeric value buckets differently as int vs long), so a batch
@@ -228,7 +217,7 @@ def merge_batch_into_snapshot(
             current.where(maintenance.partition_predicate(part_col, touched))
             .select(*keys, ord_tuple.alias("__stored_ord"))
         )
-        fresh = (
+        fresh = caching.persist(
             latest.join(stored, list(keys), "left")
             .where(
                 F.col("__stored_ord").isNull()
@@ -236,7 +225,6 @@ def merge_batch_into_snapshot(
             )
             .drop("__stored_ord")
             .select(*latest.columns)
-            .persist()
         )
         try:
             # The dedicated fresh.isEmpty() job is skipped when the
@@ -259,11 +247,9 @@ def merge_batch_into_snapshot(
                 touched=set(touched), current=current,
             )
         finally:
-            fresh.unpersist()
+            caching.release(fresh)
     finally:
-        latest.unpersist()
-        if current is not None and _PERSIST_CURRENT:
-            current.unpersist()
+        caching.release(latest)
 
 
 def stream_ticks_to_snapshot(

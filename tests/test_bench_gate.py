@@ -56,8 +56,11 @@ def test_release_caches_is_hermetic(spark):
     numbers measure cache reads instead of compute."""
     from cryptocurrency_data_pipeline_spark.operators import caching
 
-    tracked = caching.track(spark.range(100).selectExpr("id * 3 AS v").persist())
+    tracked = caching.persist(spark.range(100).selectExpr("id * 3 AS v"))
     tracked.count()
+    ckpt = caching.checkpoint(spark.range(10), eager=True)
+    rid = caching._checkpoint_rdd_id(ckpt)
+    assert rid in caching._persistent_rdd_ids(spark.sparkContext)
     untracked = spark.range(50).selectExpr("id + 7 AS w").persist()
     untracked.count()
     assert not spark._jsparkSession.sharedState().cacheManager().isEmpty()
@@ -67,3 +70,5 @@ def test_release_caches_is_hermetic(spark):
     # Both the tracked persist and the stray one are gone: a plan equal to
     # either would now recompute rather than hit the CacheManager.
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    # The registered local checkpoint's blocks are released too.
+    assert rid not in caching._persistent_rdd_ids(spark.sparkContext)

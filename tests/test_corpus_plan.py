@@ -73,7 +73,7 @@ def test_corpus_pipeline_skips_on_empty_input(spark, tmp_path):
 
 def test_pipeline_releases_tracked_caches(spark, tmp_path):
     # The plan's dedup stage persists the MinHash shingle frame via
-    # caching.track; Pipeline.run must release every tracked block when
+    # caching.persist; Pipeline.run must release every registered block when
     # the plan finishes so long-lived processes keep the block manager
     # flat.  (persist keeps lineage, so releasing is always safe.)
     def pinned() -> set[int]:
@@ -87,9 +87,9 @@ def test_pipeline_releases_tracked_caches(spark, tmp_path):
     results = build_corpus_pipeline(spark, docs, _paths(tmp_path)).run()
     assert [r.status for r in results] == [StageStatus.SUCCEEDED] * 5
 
-    from cryptocurrency_data_pipeline_spark.operators.caching import _TRACKED
+    from cryptocurrency_data_pipeline_spark.operators.caching import _LIVE
 
-    assert not [e for e in _TRACKED if e[0] is spark.sparkContext]
+    assert not [e for e in _LIVE if e[0] is spark.sparkContext]
     # nothing this plan persisted survives in the block manager (delta vs
     # the pre-run snapshot: other tests in the shared session may pin
     # their own blocks)

@@ -2,6 +2,13 @@
 must handle — transitive chains, separate components, duplicate/reversed
 edges, and a path long enough to need several propagation rounds."""
 
+import types
+import weakref
+
+import pytest
+
+from cryptocurrency_data_pipeline_spark.operators import caching
+from cryptocurrency_data_pipeline_spark.operators.caching import _persistent_rdd_ids
 from cryptocurrency_data_pipeline_spark.operators.graph import connected_components
 
 
@@ -40,10 +47,6 @@ def test_checkpoint_blocks_released_eagerly(spark):
     # each superseded round's blocks are unpersisted as soon as the next
     # generation materializes, so a multi-round run leaves at most ONE new
     # pinned RDD (the final labels) behind — not one per round.
-    from cryptocurrency_data_pipeline_spark.operators.graph import (
-        _persistent_rdd_ids,
-    )
-
     sc = spark.sparkContext
     before = _persistent_rdd_ids(sc)
     n = 12  # long path → several propagation rounds, several checkpoints
@@ -77,54 +80,84 @@ def test_pagerank_triangle_uniform_and_hub_dominates(spark):
     assert abs(sum(r.values()) - 1.0) < 1e-9
 
 
+def _live_checkpoints(sc) -> set[int]:
+    """RDD ids of the checkpoints registered on exactly this context."""
+    return {rid for ctx, _, rid in caching._LIVE if ctx is sc and rid is not None}
+
+
 def test_release_checkpoints_explicit_and_context_guarded(spark):
-    from cryptocurrency_data_pipeline_spark.operators import graph as g
-
-    edges = spark.createDataFrame([(1, 2), (3, 4)], "src long, dst long")
-    out = g.connected_components(edges)
-    assert out.count() == 4
     sc = spark.sparkContext
-    assert g._live_handles(sc), "final generation should be retained"
-    g.release_checkpoints(spark)
-    assert not g._live_handles(sc)
-    # repeated release is a no-op, and the registry is keyed by THIS
-    # context's identity (a fake context id never aliases the real one)
-    g.release_checkpoints(spark)
+    caching.release_all(spark)  # start from an empty registry on sc
+    edges = spark.createDataFrame([(1, 2), (3, 4)], "src long, dst long")
+    out = connected_components(edges)
+    assert out.count() == 4
+    final = _live_checkpoints(sc)
+    assert len(final) == 1, "final generation should be retained"
+    assert final <= _persistent_rdd_ids(sc)
 
-    class FakeSC:  # different identity -> its own empty slot
-        pass
+    # An entry on another context (identity-keyed: a parallel session or
+    # a restarted context) is never touched by this context's release.
+    foreign = types.SimpleNamespace(sparkContext=object())
+    caching._LIVE.append((foreign.sparkContext, weakref.ref(out), -1))
 
-    assert g._live_handles(FakeSC()) == []
-    assert not g._live_handles(sc)
+    assert caching.release_all(spark) >= 1
+    assert not _live_checkpoints(sc)
+    assert not final & _persistent_rdd_ids(sc), "blocks still pinned"
+    assert caching.release_all(spark) == 0  # repeated release is a no-op
+    assert [e for e in caching._LIVE if e[0] is foreign.sparkContext]
+    assert caching.release_all(foreign) == 1
 
 
 def test_held_result_survives_next_run_until_own_release(spark):
-    # The caller-held handle contract: a result frame must stay fully
-    # queryable across LATER connected_components invocations (the old
-    # invalidation-on-next-call semantics made it unrecoverable), and die
-    # only at its own release.
-    from cryptocurrency_data_pipeline_spark.operators import graph as g
-
+    # A result frame must stay fully queryable across LATER
+    # connected_components invocations (invalidation-on-next-call made it
+    # unrecoverable), and die only at its owner's release.
+    sc = spark.sparkContext
+    caching.release_all(spark)
     first_edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
-    held, handle = g.connected_components(first_edges, with_handle=True)
-    assert not handle.released
+    held = connected_components(first_edges)
+    (held_rid,) = _live_checkpoints(sc)
 
     # Two more runs on the same context — held must be untouched.
     for lo in (10, 20):
         other = spark.createDataFrame([(lo, lo + 1)], "src long, dst long")
-        g.connected_components(other)
+        connected_components(other)
     assert {r.node: r.cluster_id for r in held.collect()} == {1: 1, 2: 1, 3: 1}
+    assert held_rid in _persistent_rdd_ids(sc)
 
-    handle.release()
-    assert handle.released
-    handle.release()  # idempotent
-    # The handle's blocks are gone from the block manager.
-    from cryptocurrency_data_pipeline_spark.operators.graph import (
-        _persistent_rdd_ids,
+    caching.release_all(spark)
+    # The held result's blocks (and the two later runs') are gone.
+    assert held_rid not in _persistent_rdd_ids(sc)
+    assert not _live_checkpoints(sc)
+
+
+def test_failed_run_leaks_nothing_after_release_all(spark, monkeypatch):
+    # A round that raises must not strand the edge caches or the live
+    # label generations: the edge caches are released in the call's
+    # finally, and the owner's release_all frees the checkpoints.
+    sc = spark.sparkContext
+    edges = spark.createDataFrame(
+        [(i + 1, i) for i in range(1, 12)], "src long, dst long"
     )
+    before = _persistent_rdd_ids(sc)
+    real_agg = type(edges).agg
+    calls = []
 
-    assert handle._rid not in _persistent_rdd_ids(spark.sparkContext)
-    g.release_checkpoints(spark)  # clean up the two unheld runs
+    def failing_agg(self, *exprs):
+        calls.append(1)
+        if len(calls) == 3:  # seed fingerprint, round 1, then round 2
+            raise RuntimeError("injected round-2 failure")
+        return real_agg(self, *exprs)
+
+    monkeypatch.setattr(type(edges), "agg", failing_agg)
+    with pytest.raises(RuntimeError, match="injected round-2 failure"):
+        connected_components(edges)
+    monkeypatch.undo()
+    assert len(calls) == 3
+
+    caching.release_all(spark)
+    leaked = _persistent_rdd_ids(sc) - before
+    assert not leaked, f"RDDs still pinned after release_all: {leaked}"
 
 
 def test_triangle_stats_known_graph(spark):

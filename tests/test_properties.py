@@ -1073,3 +1073,23 @@ def test_spread_small_scan_identity_and_spread(spark):
     big = spark.range(1000).repartition(p + 4)
     same = spread_small_scan(big)
     assert same.rdd.getNumPartitions() == p + 4  # untouched
+
+
+def test_spread_small_scan_spreads_a_column_named_exchange(spark, tmp_path):
+    # The shuffle probe matches plan-node classes, not plan text: a
+    # one-file scan whose column is literally named `exchange` has no
+    # Exchange node, so it is still spread.
+    from cryptocurrency_data_pipeline_spark.operators.skew import (
+        spread_small_scan,
+    )
+
+    p = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "venues")
+    spark.createDataFrame(
+        [(f"venue{i}",) for i in range(20)], "exchange string"
+    ).coalesce(1).write.parquet(path)
+    scan = spark.read.parquet(path)
+    assert scan.rdd.getNumPartitions() < p
+    out = spread_small_scan(scan)
+    assert out.rdd.getNumPartitions() == p
+    assert out.count() == 20

@@ -205,3 +205,39 @@ def test_embedding_casts_carry_the_completeness_guard():
         f"unguarded embedding cast in oracles (use "
         f"queries._fragments.vec_sql): {offenders}"
     )
+
+
+def test_only_caching_persists_checkpoints_or_releases():
+    """``operators/caching.py`` is the one lifetime owner: every persist,
+    cache, local checkpoint and release in the package goes through its
+    registry, so an owner's ``release_all`` frees everything a failed
+    call left behind.  Parsed with ``ast``: comments and docstrings that
+    mention these methods do not count."""
+    import ast
+
+    pkg = Path(__file__).resolve().parents[1] / "cryptocurrency_data_pipeline_spark"
+    owner = pkg / "operators" / "caching.py"
+    banned = {"persist", "cache", "unpersist", "localCheckpoint"}
+    offenders = []
+    for f in sorted(pkg.rglob("*.py")):
+        if f == owner:
+            continue
+        for node in ast.walk(ast.parse(f.read_text(), str(f))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in banned
+                # caching.persist(...) is the registry's own entry point
+                and not (
+                    isinstance(node.func.value, ast.Name)
+                    and node.func.value.id == "caching"
+                )
+            ):
+                offenders.append(
+                    f"{f.relative_to(pkg)}:{node.lineno} .{node.func.attr}("
+                )
+    assert not offenders, (
+        f"persist/cache/unpersist/localCheckpoint outside "
+        f"operators/caching.py (use caching.persist/checkpoint/release): "
+        f"{offenders}"
+    )
