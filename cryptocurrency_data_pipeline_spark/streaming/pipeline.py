@@ -16,8 +16,9 @@ Spark-native mapping (SURVEY §2.9):
 * rules (P13): the same vectorized reason-array used in batch — one
   expression, no Python.
 * routing (T4/T5): ``foreachBatch`` caches each micro-batch once and writes
-  good / bad / alert / corrupt sinks as partitioned parquet appends — the
-  row-by-row ``put_item``/``send_message`` loops become 4 bulk writes.
+  good / bad / alert / corrupt sinks as partitioned parquet/JSON appends —
+  the row-by-row ``put_item``/``send_message`` loops become 4 concurrent
+  bulk writes, the persist released after all finish.
 * bad-record files (S12/T7): partitioned by ``dt``/``hour`` exactly like the
   reference's ``bad_records/dt=…/hour=…`` S3 keys (consumer.py:106).
 * checkpointing (T11): every query runs with ``checkpointLocation`` —
@@ -30,8 +31,11 @@ Spark-native mapping (SURVEY §2.9):
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -214,19 +218,19 @@ def split_micro_batch(batch: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame
 
 
 def process_micro_batch(batch: DataFrame, epoch_id: int, sinks: StreamSinks) -> None:
-    """foreachBatch body: cache once, 4 bulk writes (replaces the
-    reference's per-record put_item / send_message / publish loops)."""
+    """foreachBatch body: cache once, 4 concurrent bulk writes, persist
+    released after all finish (replaces the reference's per-record
+    put_item / send_message / publish loops)."""
     caching.persist(batch)
     try:
         good, bad, alert, corrupt = split_micro_batch(batch)
-        (
+        good_w = (
             good.drop("raw_data")
             .withColumn("dt", F.to_date("event_time"))
             .write.mode("append")
             .partitionBy("dt")
-            .parquet(sinks.good)
         )
-        (
+        bad_w = (
             bad.select(
                 "raw_data",
                 "error_reason",
@@ -235,13 +239,47 @@ def process_micro_batch(batch: DataFrame, epoch_id: int, sinks: StreamSinks) -> 
             )
             .write.mode("append")
             .partitionBy("dt", "hour")
-            .json(sinks.bad)
         )
-        alert_rows = alert.drop("raw_data")
-        alert_rows.write.mode("append").json(sinks.alert)
-        corrupt.write.mode("append").json(sinks.corrupt)
+        _write_concurrently(batch.sparkSession, [
+            (good_w.parquet, sinks.good),
+            (bad_w.json, sinks.bad),
+            (alert.drop("raw_data").write.mode("append").json, sinks.alert),
+            (corrupt.write.mode("append").json, sinks.corrupt),
+        ])
     finally:
         caching.release(batch)
+
+
+def _write_concurrently(
+    spark: SparkSession, writes: list[tuple[Callable[[str], None], str]]
+) -> None:
+    """Call every ``save(path)`` of ``writes`` on a thread of its own, wait
+    for all of them, then re-raise the first failure (in list order).
+
+    The sink writes are short jobs that leave most cores idle, and the
+    sinks are independent, so their order within a batch does not matter:
+    the exactly-once body still rests on its idempotent epoch partitions
+    and the append body stays at-least-once.  Each target gets its own
+    ``inheritable_thread_target`` wrap, hence a private clone of the
+    caller's local properties (job group, job tags, the stream's query
+    ids): stopping the query still cancels every write, and the jobs stay
+    attributed to the caller.  One clone shared by several threads would
+    race on the per-thread SQL execution id.  Writes that reach the
+    batch's persist before it is materialized wait on Spark's block
+    write-locks for one computation instead of each recomputing it.
+
+    Known limit: ``caching.release_all()`` releases every registration in
+    the process, so a ``Pipeline.run`` ending on another thread while the
+    writes run frees the batch's persist under them.  The writes then
+    recompute the batch from its source: the same output, only slower.
+    """
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(save), path)
+            for save, path in writes
+        ]
+    for f in futures:
+        f.result()
 
 
 def enrich_with_dim(
@@ -290,18 +328,19 @@ def process_micro_batch_exactly_once(
 def _write_epoch_partitioned_sinks(
     batch: DataFrame, epoch_id: int, sinks: StreamSinks
 ) -> None:
+    """Cache once, 4 concurrent epoch-partitioned overwrites, persist
+    released after all finish."""
     batch = batch.withColumn("epoch", F.lit(epoch_id).cast("long"))
     caching.persist(batch)
     try:
         good, bad, alert, corrupt = split_micro_batch(batch)
-        (
+        good_w = (
             good.drop("raw_data")
             .withColumn("dt", F.to_date("event_time"))
             .write.mode("overwrite")
             .partitionBy("epoch", "dt")
-            .parquet(sinks.good)
         )
-        (
+        bad_w = (
             bad.select(
                 "raw_data",
                 "error_reason",
@@ -311,20 +350,19 @@ def _write_epoch_partitioned_sinks(
             )
             .write.mode("overwrite")
             .partitionBy("epoch", "dt", "hour")
-            .json(sinks.bad)
         )
-        (
-            alert.drop("raw_data")
-            .write.mode("overwrite")
-            .partitionBy("epoch")
-            .json(sinks.alert)
-        )
-        (
+        alert_w = alert.drop("raw_data").write.mode("overwrite").partitionBy("epoch")
+        corrupt_w = (
             corrupt.withColumn("epoch", F.lit(epoch_id).cast("long"))
             .write.mode("overwrite")
             .partitionBy("epoch")
-            .json(sinks.corrupt)
         )
+        _write_concurrently(batch.sparkSession, [
+            (good_w.parquet, sinks.good),
+            (bad_w.json, sinks.bad),
+            (alert_w.json, sinks.alert),
+            (corrupt_w.json, sinks.corrupt),
+        ])
     finally:
         caching.release(batch)
 

@@ -795,3 +795,54 @@ def test_dedup_within_watermark_requires_event_time_on_streams(spark, tmp_path):
     stream = pipeline.read_tick_stream(spark, src).drop("event_time")
     with pytest.raises(ValueError, match="event_time"):
         pipeline.dedup_stream_within_watermark(stream)
+
+
+def _static_router_batch(spark, tmp_path):
+    """A 12-line static frame (8 ticks + 3 anomalies + 1 corrupt line)
+    shaped like one router micro-batch."""
+    src = str(tmp_path / "src")
+    producer.write_batch(src, producer.make_batch(8), corrupt_lines=1)
+    return pipeline.decode_tick_payload(spark.read.text(src))
+
+
+def _committed(path):
+    """Part files moved out of the job's staging area: the write committed."""
+    parts = glob.glob(f"{path}/**/part-*", recursive=True)
+    return [p for p in parts if "_temporary" not in p]
+
+
+def test_router_sink_failure_propagates_after_all_writes_and_releases(spark, tmp_path):
+    """One failing sink fails the batch, but only after the other three
+    writes have committed, and the batch's persist is released either way
+    (both router bodies)."""
+    import pytest
+
+    from cryptocurrency_data_pipeline_spark.operators import caching
+
+    batch = _static_router_batch(spark, tmp_path)
+    for body in (pipeline.process_micro_batch, pipeline.process_micro_batch_exactly_once):
+        root = tmp_path / body.__name__
+        root.mkdir()
+        sinks = _sinks(root)
+        (root / "alert").write_text("a regular file, not a sink directory\n")
+        before = list(caching._LIVE)
+        with pytest.raises(Exception, match="alert"):
+            body(batch, 0, sinks)
+        for path in (sinks.good, sinks.bad, sinks.corrupt):
+            assert _committed(path), path
+        assert [e for e in caching._LIVE if not any(e is b for b in before)] == []
+
+
+def test_router_writes_inherit_job_group_and_add_no_job(spark, tmp_path):
+    """The sink writes run on the caller's job group (their threads
+    inherit its local properties, so stopping a query cancels them) and
+    the append body launches exactly the 4 jobs of the sequential one."""
+    batch = _static_router_batch(spark, tmp_path)
+    sc = spark.sparkContext
+    sc.setJobGroup("router-pin", "router job-count pin")
+    try:
+        pipeline.process_micro_batch(batch, 0, _sinks(tmp_path))
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker reads listener state
+    assert len(sc.statusTracker().getJobIdsForGroup("router-pin")) == 4
